@@ -22,11 +22,19 @@ Stage order is user-visible behavior and is replicated exactly
       do not "fix")
 
 Scale design: the reference runs one eager pandas pass per column per
-statistic. Here the whole stage costs THREE distributed jobs regardless of
-column count: (1) the fused profile aggregate (profiling.profile), (2) one
-melted group-count pass for all string modes, (3) one quantile aggregate
-over the encoded frame for clip bounds. Encoding maps are built lazily as
-joins inside the final plan (broadcast when small; AQE handles the rest).
+statistic. Here the number of passes over the data is constant in column
+count: (1) the fused profile aggregate (profiling.profile), (2) one
+melted group-count pass for all string modes, (3) one melted count pass
+for every string encoding (eagerly checkpointed), (4) one quantile
+aggregate over the encoded frame for clip bounds, which also fills the
+cache of that frame. Encoding maps are joined inside the final plan
+(broadcast when small; AQE handles the rest).
+
+A pass is several Spark jobs: under AQE every shuffle stage and every
+broadcast runs as a job of its own. On the 5,000-row FIXTURES.md F1
+upload the stage launches 18 jobs: profile 3, modes 3, encode 2 and
+clip bounds 10, the last including the label-code broadcasts and the
+cache fill.
 """
 
 from __future__ import annotations
@@ -44,7 +52,7 @@ from data_pipeline_agent_spark.operators.profiling import (
 
 
 def string_modes(df: DataFrame, cols: list[str]) -> dict[str, str]:
-    """Deterministic mode per string column, ONE job for all columns.
+    """Deterministic mode per string column, ONE pass for all columns.
 
     pandas ``mode()[0]`` returns the smallest value among frequency ties
     (main.py:82-84). Spark's ``F.mode`` is arbitrary on ties, so we rank
@@ -397,10 +405,11 @@ def clean_data(df: DataFrame) -> tuple[DataFrame, str]:
 
     Returns (cleaned DataFrame, message) with the reference's message
     contract: "Data cleaned: (rows, cols) → (rows, cols) rows/columns".
-    Cost: 3 distributed jobs + lazy encode joins (see module docstring).
+    Cost: four passes over the data, 18 Spark jobs on F1 (see module
+    docstring).
     """
     n_cols_in = len(df.columns)
-    prof = profile(df)  # job 1: fused scan
+    prof = profile(df)  # pass 1: fused scan
     original_shape = (prof.n_rows, n_cols_in)
 
     df = drop_all_null_columns(df, prof)
@@ -409,16 +418,16 @@ def clean_data(df: DataFrame) -> tuple[DataFrame, str]:
         for c in string_columns(df)
         if 0 < prof.non_null.get(c, 0) < prof.n_rows
     ]
-    modes = string_modes(df, need_mode)  # job 2: melted mode pass
+    modes = string_modes(df, need_mode)  # pass 2: melted mode pass
     df = impute(df, prof, modes)
     df = parse_datetime_columns(df, prof)
-    df = encode_strings(df, prof.n_rows, prof.n_distinct)
+    df = encode_strings(df, prof.n_rows, prof.n_distinct)  # pass 3: melted counts
     df = expand_datetimes(df)
 
     num_cols = numeric_columns(df)
     # Cache: the encoded frame is scanned twice (clip-bounds agg + output).
     df = df.cache()
-    bounds = iqr_bounds(df, num_cols)  # job 3: quantile agg over encoded frame
+    bounds = iqr_bounds(df, num_cols)  # pass 4: quantile agg over encoded frame
     cleaned = iqr_clip(df, bounds)
 
     msg = f"Data cleaned: {original_shape} → ({prof.n_rows}, {len(cleaned.columns)}) rows/columns"

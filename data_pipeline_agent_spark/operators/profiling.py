@@ -56,7 +56,7 @@ def profile(df: DataFrame) -> Profile:
     """One aggregate pass producing every scalar clean_data needs.
 
     Replaces the reference's per-column eager passes (main.py:72-105) with
-    a single job: non-null counts (P1/P2), exact medians (E1), exact
+    a single aggregate (a few Spark jobs under AQE): non-null counts (P1/P2), exact medians (E1), exact
     distinct counts (A2 — `approx_count_distinct` could flip the
     `nunique > n/2` encoding branch, so exact it is), dash probes and
     timestamp-parse counts (E3).

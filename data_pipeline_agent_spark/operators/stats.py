@@ -1,14 +1,42 @@
 """Visualization-support statistics (SURVEY §2.4 A1-A8) — every figure's
 data is a distributed aggregate collected as a tiny driver-side result;
 no row data ever leaves the cluster.
+
+``figure_data`` gathers the data behind every report figure
+(pipeline/viz.py) in three fused passes over the frame, all of them
+JVM-only (no Python workers, no ``pyspark.mllib``):
+
+  A  one aggregate for every scalar: row count, the target's distinct
+     count, per plotted column its min/max in the native type plus
+     count, stddev, min and max as double, and ``var_samp`` of the
+     correlation candidates;
+  B  one melted pass: each row exploded over the KDE_POINTS grid
+     indexes and grouped by index, summing per plotted column the
+     Gaussian kernel term at that grid point and counting the rows that
+     fall in that histogram bin;
+  C  one ``corr`` aggregate over the non-constant correlation candidates.
+
+A categorical target adds its value counts (``group_counts``). On the
+FIXTURES.md F1 upload (five plotted columns, categorical target) that is
+9 Spark jobs; one pass per statistic per column took 43.
 """
 
 from __future__ import annotations
 
+import math
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, FloatType
 
 from data_pipeline_agent_spark.operators.profiling import numeric_columns
+
+HIST_COLS = 5  # histograms of the first 5 numeric columns (main.py:178)
+CORR_COLS = 10  # correlation over the first 10 numeric columns (main.py:165)
+CATEGORICAL_MAX = 20  # target drawn as value counts when nunique <= 20 (main.py:152)
+HIST_BINS = 20
+KDE_POINTS = 64
 
 
 def group_counts(df: DataFrame, col: str, limit: int = 50) -> list[tuple]:
@@ -23,96 +51,172 @@ def group_counts(df: DataFrame, col: str, limit: int = 50) -> list[tuple]:
     ]
 
 
-def histogram_bins(df: DataFrame, col: str, bins: int = 20) -> list[tuple]:
-    """A7 fixed-width histogram: [(bin_start, bin_end, count)]. One agg for
-    min/max + one grouped agg for counts."""
-    mm = df.agg(F.min(col).alias("mn"), F.max(col).alias("mx")).first()
-    mn, mx = mm["mn"], mm["mx"]
-    if mn is None or mx is None:
-        return []
-    if mx == mn:
-        return [(float(mn), float(mx), df.where(F.col(col).isNotNull()).count())]
-    b = (
-        df.where(F.col(col).isNotNull())
-        .select(
-            F.least(
-                F.floor((F.col(col) - F.lit(mn)) / F.lit(mx - mn) * bins), F.lit(bins - 1)
-            ).alias("bin")
-        )
-        .groupBy("bin")
-        .count()
-        .collect()
+@dataclass
+class Distribution:
+    """One plotted column: A7 fixed-width histogram [(bin_start, bin_end,
+    count)] and the KDE overlay [(x, density)] on an even grid between
+    the column's min and max. ``bins`` is [] for an all-null column and a
+    single bin for a constant one; ``kde`` is [] when fewer than two
+    values or no spread (seaborn skips the curve there too)."""
+
+    bins: list[tuple]
+    kde: list[tuple[float, float]]
+
+
+@dataclass
+class FigureData:
+    """Everything generate_visualizations draws, as driver-side values."""
+
+    n_rows: int
+    target_counts: list[tuple] | None  # categorical target's value counts
+    dists: dict[str, Distribution]  # histogram columns + a non-categorical target
+    hist_cols: list[str]
+    corr_cols: list[str]  # non-constant correlation candidates
+    corr: dict[tuple[str, str], float]
+
+
+def _nan_as_null(df: DataFrame) -> DataFrame:
+    """NaN is missing, as in the pandas frame the reference plots: it is
+    dropped like null from every figure."""
+    fl = {f.name for f in df.schema.fields if isinstance(f.dataType, (FloatType, DoubleType))}
+    if not fl:
+        return df
+    return df.select(
+        *[F.when(~F.isnan(c), F.col(c)).alias(c) if c in fl else F.col(c) for c in df.columns]
     )
-    counts = {int(r["bin"]): r["count"] for r in b}
-    w = (mx - mn) / bins
-    return [
-        (float(mn + i * w), float(mn + (i + 1) * w), counts.get(i, 0)) for i in range(bins)
-    ]
 
 
-def corr_pairs(df: DataFrame, max_cols: int = 10) -> tuple[list[str], dict]:
-    """A6 Pearson matrix over the first max_cols numeric columns
-    (reference caps at 10, main.py:165) in ONE aggregate pass."""
-    cols = numeric_columns(df)[:max_cols]
-    if len(cols) < 2:
-        return cols, {}
-    # F.corr on a zero-variance column raises DIVIDE_BY_ZERO under Spark
-    # 4's ANSI mode (pandas shows NaN); screen out constant columns first
-    var_row = df.agg(*[F.var_samp(F.col(c).cast("double")).alias(c) for c in cols]).first()
-    cols = [c for c in cols if var_row[c] is not None and var_row[c] > 0]
-    if len(cols) < 2:
-        return cols, {}
-    aggs = []
-    for i, a in enumerate(cols):
-        for b in cols[i + 1 :]:
-            aggs.append(F.corr(a, b).alias(f"{a}||{b}"))
-    row = df.agg(*aggs).first().asDict()
-    out = {}
-    for k, v in row.items():
-        a, b = k.split("||")
-        out[(a, b)] = v
-        out[(b, a)] = v
-    for c in cols:
-        out[(c, c)] = 1.0
-    return cols, out
+def figure_data(df: DataFrame, target_col: str | None = None) -> FigureData:
+    """Data behind every figure of generate_visualizations (main.py:134-189).
 
+    Histograms bin in the column's native type (decimal edges stay exact):
+    bin = min(floor((x - min) / (max - min) * HIST_BINS), HIST_BINS - 1).
+    The KDE is the Gaussian kernel density at Scott's bandwidth
+    (std * n^(-1/5), the seaborn default), evaluated with MLlib
+    KernelDensity's arithmetic: each term is
+    exp(-0.5 * ((g - x) / bw)^2 - (ln bw + ln(2 pi) / 2)), summed over the
+    n values and scaled by 1/n.
 
-def kde_grid(df: DataFrame, col: str, n_points: int = 64) -> list[tuple[float, float]]:
-    """A7 KDE overlay (reference: sns.histplot(kde=True), main.py:156,179).
-
-    Gaussian kernel density evaluated on an n_points even grid between the
-    column's min and max, via ``pyspark.mllib.stat.KernelDensity`` — the
-    sample stays distributed (one RDD pass per estimate); only the
-    n_points grid densities come back to the driver. Bandwidth is Scott's
-    rule (std * n^(-1/5)), the seaborn default, so the curve shape matches
-    the reference's overlay.
-
-    Returns [] when the column is empty or constant (no density to draw),
-    mirroring seaborn's silent skip.
+    Raises ValueError naming the column when a plotted column holds +-inf
+    (a histogram needs a finite range, as numpy's does), and TypeError
+    for a non-numeric target with more than CATEGORICAL_MAX values.
     """
-    from pyspark.mllib.stat import KernelDensity
+    num = numeric_columns(df)
+    hist_cols = num[:HIST_COLS]
+    corr_cols = num[:CORR_COLS] if len(num) >= 2 else []
+    if target_col not in df.columns:
+        target_col = None
+    df = _nan_as_null(df)
 
-    s = (
-        df.where(F.col(col).isNotNull())
-        .agg(
-            F.count(col).alias("n"),
-            F.stddev(F.col(col).cast("double")).alias("sd"),
-            F.min(F.col(col).cast("double")).alias("lo"),
-            F.max(F.col(col).cast("double")).alias("hi"),
-        )
-        .first()
+    # Pass A. The target's stats are taken whenever it is numeric: whether
+    # it is histogrammed is known only from its distinct count.
+    cand = list(dict.fromkeys(hist_cols + ([target_col] if target_col in num else [])))
+    aggs = [F.count(F.lit(1)).alias("n")]
+    if target_col:
+        aggs.append(F.count_distinct(target_col).alias("nd"))
+    for i, c in enumerate(cand):
+        x, d = F.col(c), F.col(c).cast("double")
+        aggs += [
+            F.min(x).alias(f"mn{i}"),
+            F.max(x).alias(f"mx{i}"),
+            F.count(x).alias(f"n{i}"),
+            F.stddev(d).alias(f"sd{i}"),
+            F.min(d).alias(f"lo{i}"),
+            F.max(d).alias(f"hi{i}"),
+        ]
+    # corr on a zero-variance column raises DIVIDE_BY_ZERO under ANSI
+    # (pandas shows NaN): variances screen the candidates first
+    aggs += [F.var_samp(F.col(c).cast("double")).alias(f"var{i}") for i, c in enumerate(corr_cols)]
+    row = df.agg(*aggs).first()
+
+    target_counts = None
+    plotted = list(hist_cols)
+    if target_col:
+        if row["nd"] <= CATEGORICAL_MAX:
+            target_counts = group_counts(df, target_col, limit=CATEGORICAL_MAX)
+        elif target_col in num:
+            plotted = list(dict.fromkeys(plotted + [target_col]))
+        else:
+            raise TypeError(
+                f"target column {target_col!r} is not numeric and has {row['nd']} "
+                f"distinct values; only a numeric column gets a histogram"
+            )
+
+    dists = _distributions(df, row, [(c, cand.index(c)) for c in plotted])
+
+    screened = [
+        c for i, c in enumerate(corr_cols) if row[f"var{i}"] is not None and row[f"var{i}"] > 0
+    ]
+    return FigureData(
+        n_rows=row["n"],
+        target_counts=target_counts,
+        dists=dists,
+        hist_cols=hist_cols,
+        corr_cols=screened,
+        corr=_corr(df, screened),
     )
-    n, sd, lo, hi = s["n"], s["sd"], s["lo"], s["hi"]
-    if not n or n < 2 or sd is None or sd == 0.0 or lo == hi:
-        return []
-    bw = float(sd) * float(n) ** (-0.2)
-    kd = KernelDensity()
-    kd.setSample(
-        df.where(F.col(col).isNotNull())
-        .select(F.col(col).cast("double"))
-        .rdd.map(lambda r: r[0])
-    )
-    kd.setBandwidth(bw)
-    xs = [lo + (hi - lo) * i / (n_points - 1) for i in range(n_points)]
-    ys = kd.estimate(xs)
-    return [(float(x), float(y)) for x, y in zip(xs, ys)]
+
+
+def _distributions(df: DataFrame, row, cols: list[tuple[str, int]]) -> dict[str, Distribution]:
+    """Histograms and KDE curves of ``cols`` ((name, index into pass A's
+    row)) from pass A's scalars and ONE melted pass (pass B): every row
+    is exploded over the grid index j, and one aggregate grouped by j
+    sums each column's kernel term at grid point j and counts its rows in
+    bin j (HIST_BINS <= KDE_POINTS, so every bin is some j)."""
+    sel, aggs, kdes = [], [], {}
+    j = F.col("j")
+    for c, i in cols:
+        mn, mx, n, sd, lo, hi = (row[f"{k}{i}"] for k in ("mn", "mx", "n", "sd", "lo", "hi"))
+        if lo == -math.inf or hi == math.inf:
+            raise ValueError(
+                f"column {c!r} holds an infinite value: its histogram range is not finite"
+            )
+        x = F.col(c)
+        if mn is not None and mx != mn:
+            # native-type arithmetic, projected before the explode
+            k = F.least(F.floor((x - F.lit(mn)) / F.lit(mx - mn) * HIST_BINS), F.lit(HIST_BINS - 1))
+            sel.append(k.cast("int").alias(f"b{i}"))
+            aggs.append(F.count(F.when(F.col(f"b{i}") == j, 1)).alias(f"h{i}"))
+        if n and n >= 2 and sd is not None and sd != 0.0 and lo != hi:
+            bw = float(sd) * float(n) ** (-0.2)
+            log_norm = math.log(bw) + 0.5 * math.log(2 * math.pi)
+            sel.append(x.cast("double").alias(f"x{i}"))
+            # the grid point in the same IEEE operations as ``xs`` below
+            g = F.lit(lo) + F.lit(hi - lo) * j / F.lit(KDE_POINTS - 1)
+            z = (g - F.col(f"x{i}")) / bw
+            aggs.append(F.sum(F.exp(F.lit(-0.5) * z * z - log_norm)).alias(f"s{i}"))
+            kdes[c] = [lo + (hi - lo) * p / (KDE_POINTS - 1) for p in range(KDE_POINTS)]
+
+    by_j = {}
+    if aggs:
+        grid = F.explode(F.sequence(F.lit(0), F.lit(KDE_POINTS - 1))).alias("j")
+        by_j = {r["j"]: r for r in df.select(*sel, grid).groupBy("j").agg(*aggs).collect()}
+
+    out = {}
+    for c, i in cols:
+        mn, mx, n = row[f"mn{i}"], row[f"mx{i}"], row[f"n{i}"]
+        if mn is None:
+            bins = []
+        elif mx == mn:
+            bins = [(float(mn), float(mx), n)]
+        else:
+            w = (mx - mn) / HIST_BINS
+            bins = [
+                (float(mn + b * w), float(mn + (b + 1) * w), by_j[b][f"h{i}"])
+                for b in range(HIST_BINS)
+            ]
+        kde = [(x, by_j[p][f"s{i}"] * (1.0 / n)) for p, x in enumerate(kdes.get(c, []))]
+        out[c] = Distribution(bins, kde)
+    return out
+
+
+def _corr(df: DataFrame, cols: list[str]) -> dict[tuple[str, str], float]:
+    """A6 Pearson matrix of ``cols`` in ONE aggregate (pass C)."""
+    if len(cols) < 2:
+        return {}
+    pairs = [(a, b) for i, a in enumerate(cols) for b in cols[i + 1 :]]
+    row = df.agg(*[F.corr(a, b).alias(f"p{k}") for k, (a, b) in enumerate(pairs)]).first()
+    out = {(c, c): 1.0 for c in cols}
+    for k, (a, b) in enumerate(pairs):
+        out[(a, b)] = out[(b, a)] = row[f"p{k}"]
+    return out

@@ -3,15 +3,15 @@
 (corr <= first 10 numeric, histograms <= first 5), same (title, payload)
 output contract.
 
-The data behind every figure is a distributed Spark aggregate
-(operators/stats.py); rendering is driver-side over those tiny results.
+The data behind every figure comes from operators/stats.figure_data:
+three fused JVM-only passes over the frame (plus the categorical
+target's value counts); rendering is driver-side over those tiny results.
 This container has no matplotlib/seaborn, so figures render as
 dependency-free SVG data-URIs (deterministic string assembly). With
-matplotlib installed the same FigureSpec data could feed PNG rendering —
-the Spark side is identical either way. Histograms carry the reference's
-KDE overlay (sns.histplot(kde=True), main.py:156,179) as a polyline:
-densities come from pyspark.mllib.stat.KernelDensity on a 64-point grid
-(operators/stats.kde_grid), scaled to the tallest bar like seaborn does.
+matplotlib installed the same data could feed PNG rendering — the Spark
+side is identical either way. Histograms carry the reference's KDE
+overlay (sns.histplot(kde=True), main.py:156,179) as a polyline: Gaussian
+densities on a 64-point grid, scaled to the tallest bar like seaborn does.
 """
 
 from __future__ import annotations
@@ -19,15 +19,8 @@ from __future__ import annotations
 import base64
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from data_pipeline_agent_spark.operators.profiling import numeric_columns
-from data_pipeline_agent_spark.operators.stats import (
-    corr_pairs,
-    group_counts,
-    histogram_bins,
-    kde_grid,
-)
+from data_pipeline_agent_spark.operators.stats import Distribution, figure_data
 
 _W, _H = 600, 360
 
@@ -124,17 +117,24 @@ def _svg_heatmap(cols: list[str], corr: dict, title: str) -> str:
     )
 
 
+def _svg_hist(dist: Distribution, title: str) -> str:
+    return _svg_bars([(f"{lo:.3g}", c) for lo, _, c in dist.bins], title, kde=dist.kde)
+
+
 def generate_visualizations(
     df: DataFrame, target_col: str | None = None, n_rows: int | None = None
 ) -> list[tuple[str, str]]:
     """[(title, base64-SVG)] — figure inventory of main.py:134-189.
 
-    Pass n_rows when already known to skip a recount (the pipeline caches
-    the cleaned frame and counts once).
+    Pass n_rows when already known (the pipeline caches the cleaned frame
+    and counts once); otherwise the figure passes count the rows.
+    NaN counts as missing; a plotted column holding +-inf raises
+    ValueError naming the column.
     """
     figs: list[tuple[str, str]] = []
+    data = figure_data(df, target_col)
     if n_rows is None:
-        n_rows = df.count()
+        n_rows = data.n_rows
 
     # 1. Dataset overview (main.py:139-147)
     figs.append(
@@ -155,36 +155,25 @@ def generate_visualizations(
 
     # 2. Target distribution (main.py:150-161): categorical if nunique<=20
     if target_col and target_col in df.columns:
-        nd = df.agg(F.count_distinct(target_col)).first()[0]
-        if nd <= 20:
-            pairs = group_counts(df, target_col, limit=20)
-            svg = _svg_bars(pairs, f"Distribution of {target_col}")
+        title = f"Distribution of {target_col}"
+        if data.target_counts is not None:
+            svg = _svg_bars(data.target_counts, title)
         else:
-            nn = df.where(F.col(target_col).isNotNull())
-            bins = histogram_bins(nn, target_col)
-            svg = _svg_bars(
-                [(f"{lo:.3g}", c) for lo, _, c in bins],
-                f"Distribution of {target_col}",
-                kde=kde_grid(nn, target_col),
-            )
+            svg = _svg_hist(data.dists[target_col], title)
         figs.append((f"Target Distribution ({target_col})", _svg_to_b64(svg)))
 
     # 3. Correlation heatmap, first 10 numeric (main.py:164-175)
-    cols, corr = corr_pairs(df, max_cols=10)
-    if len(cols) >= 2:
+    if len(data.corr_cols) >= 2:
         figs.append(
-            ("Feature Correlation", _svg_to_b64(_svg_heatmap(cols, corr, "Feature Correlation Matrix")))
+            (
+                "Feature Correlation",
+                _svg_to_b64(_svg_heatmap(data.corr_cols, data.corr, "Feature Correlation Matrix")),
+            )
         )
 
     # 4. Top-5 numeric feature distributions (main.py:178-187)
-    for i, col in enumerate(numeric_columns(df)[:5]):
-        nn = df.where(F.col(col).isNotNull())
-        bins = histogram_bins(nn, col)
-        svg = _svg_bars(
-            [(f"{lo:.3g}", c) for lo, _, c in bins],
-            f"Distribution of {col}",
-            kde=kde_grid(nn, col),
-        )
+    for i, col in enumerate(data.hist_cols):
+        svg = _svg_hist(data.dists[col], f"Distribution of {col}")
         figs.append((f"Feature {i + 1}: {col}", _svg_to_b64(svg)))
 
     return figs

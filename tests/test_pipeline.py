@@ -1,7 +1,12 @@
 """End-to-end pipeline contract tests (FIXTURES.md F1/F4 shapes +
 reference report/error contracts)."""
 
+import hashlib
+import json
+import os
+
 import pytest
+from conftest import SF_DIR
 
 from data_pipeline_agent_spark.pipeline.run import run_pipeline
 from data_pipeline_agent_spark.pipeline.viz import generate_visualizations
@@ -24,6 +29,53 @@ def f1_csv(spark, tmp_path_factory):
                 f"2023-{1 + i % 12:02d}-{1 + i % 28:02d} 10:30:00,,{churn}\n"
             )
     return str(p)
+
+
+@pytest.fixture(scope="module")
+def f1_cleaned(spark, f1_csv):
+    """The F1 fixture as run_pipeline hands it to the figures: cleaned,
+    cached and counted."""
+    from data_pipeline_agent_spark.operators.cleaning import clean_data
+    from data_pipeline_agent_spark.sources.readers import read_any
+
+    cleaned, _ = clean_data(read_any(spark, f1_csv))
+    cleaned = cleaned.cache()
+    cleaned.count()
+    yield cleaned
+    cleaned.unpersist()
+
+
+def figure_cases(spark, f1_cleaned) -> dict:
+    """{name: (frame, target)} whose figure payloads are frozen in
+    viz_figure_hashes.json: the F1 fixture, sf0.01 lineitem (decimal
+    columns) and the degenerate shapes."""
+    li = spark.read.parquet(os.path.join(os.path.dirname(SF_DIR), "sf0.01", "lineitem.parquet"))
+    schema = "a double, b int, s string"
+    nulls = spark.createDataFrame([(None, None, "x")] * 3, schema)
+    const = spark.createDataFrame([(5.0, 7, "x")] * 4, schema)
+    single = spark.createDataFrame([(1.5, 3, "x")], schema)
+    empty = spark.createDataFrame([], schema)
+    ints = spark.createDataFrame(
+        [(i, (i * 37) % 101, i % 3) for i in range(200)], "a int, b long, c short"
+    )
+    return {
+        "f1_churn": (f1_cleaned, "churn"),
+        "f1_income": (f1_cleaned, "income"),
+        "lineitem_l_quantity": (li, "l_quantity"),
+        "lineitem_no_target": (li, None),
+        "all_null": (nulls, None),
+        "all_null_target": (nulls, "a"),
+        "constant": (const, None),
+        "constant_target": (const, "a"),
+        "single_row": (single, "a"),
+        "empty": (empty, None),
+        "empty_target": (empty, "a"),
+        "integer": (ints, "b"),
+    }
+
+
+def figure_digests(figs) -> list[list[str]]:
+    return [[t, hashlib.sha256(p.encode()).hexdigest()] for t, p in figs]
 
 
 def test_run_pipeline_report_contract(spark, f1_csv, tmp_path):
@@ -124,18 +176,18 @@ def test_pwa_route_surface_parity():
 
 
 def test_kde_grid_matches_gaussian_kde(spark):
-    """kde_grid == the textbook Gaussian KDE (1/(n*h)) * sum phi((x-xi)/h)
+    """The KDE grid == the textbook Gaussian KDE (1/(n*h)) * sum phi((x-xi)/h)
     at Scott's bandwidth, evaluated with numpy on the same fixture."""
     import math
 
     import numpy as np
 
-    from data_pipeline_agent_spark.operators.stats import kde_grid
+    from data_pipeline_agent_spark.operators.stats import KDE_POINTS, figure_data
 
     vals = [1.0, 2.0, 2.5, 3.0, 3.5, 4.0, 4.5, 5.0, 7.0, 9.0]
     df = spark.createDataFrame([(v,) for v in vals], "x double")
-    grid = kde_grid(df, "x", n_points=16)
-    assert len(grid) == 16
+    grid = figure_data(df).dists["x"].kde
+    assert len(grid) == KDE_POINTS
     xs = np.array([p[0] for p in grid])
     assert xs[0] == 1.0 and xs[-1] == 9.0
 
@@ -154,12 +206,83 @@ def test_kde_grid_matches_gaussian_kde(spark):
 
 
 def test_kde_grid_degenerate_cases(spark):
-    from data_pipeline_agent_spark.operators.stats import kde_grid
+    from data_pipeline_agent_spark.operators.stats import figure_data
 
     const = spark.createDataFrame([(5.0,), (5.0,)], "x double")
-    assert kde_grid(const, "x") == []
+    assert figure_data(const).dists["x"].kde == []
     empty = spark.createDataFrame([], "x double")
-    assert kde_grid(empty, "x") == []
+    assert figure_data(empty).dists["x"].kde == []
+
+
+def test_histogram_bins_match_numpy_on_decimal_column(spark):
+    """Decimal columns bin in decimal arithmetic; on a range whose edges
+    are exact in binary (0..10, width 0.5) numpy's float histogram is an
+    exact reference, values sitting on edges included."""
+    import random
+    from decimal import Decimal
+
+    import numpy as np
+
+    from data_pipeline_agent_spark.operators.stats import figure_data
+
+    rng = random.Random(7)
+    vals = [Decimal(rng.randrange(0, 1001)) / 100 for _ in range(400)]
+    vals += [Decimal("0.00"), Decimal("2.50"), Decimal("7.00"), Decimal("10.00")]
+    df = spark.createDataFrame([(v,) for v in vals], "d decimal(6,2)")
+    bins = figure_data(df).dists["d"].bins
+
+    counts, edges = np.histogram([float(v) for v in vals], bins=20)
+    assert [c for _, _, c in bins] == counts.tolist()
+    assert [lo for lo, _, _ in bins] + [bins[-1][1]] == edges.tolist()
+
+
+def test_visualizations_nan_is_missing_and_inf_is_refused(spark):
+    """NaN is dropped like null (pandas upload semantics); +-inf in a
+    plotted column fails loud, naming the column."""
+    nan, inf = float("nan"), float("inf")
+    base = [float(v % 17) for v in range(60)]
+    with_nan = spark.createDataFrame(
+        [(v, nan if i % 7 == 0 else v) for i, v in enumerate(base)], "x double, y double"
+    )
+    with_null = spark.createDataFrame(
+        [(v, None if i % 7 == 0 else v) for i, v in enumerate(base)], "x double, y double"
+    )
+    assert generate_visualizations(with_nan, "y") == generate_visualizations(with_null, "y")
+
+    for bad in (inf, -inf):
+        df = spark.createDataFrame([(v, bad if i == 3 else v) for i, v in enumerate(base)],
+                                   "x double, y double")
+        with pytest.raises(ValueError, match="'y'"):
+            generate_visualizations(df)
+
+
+def test_figure_payloads_match_frozen_hashes(spark, f1_cleaned):
+    """Every figure payload is byte-identical to the one the per-figure
+    implementation (MLlib KernelDensity, one job per statistic) drew."""
+    with open(os.path.join(os.path.dirname(__file__), "viz_figure_hashes.json")) as f:
+        want = json.load(f)
+    cases = figure_cases(spark, f1_cleaned)
+    assert sorted(cases) == sorted(want)
+    got = {name: figure_digests(generate_visualizations(df, t)) for name, (df, t) in cases.items()}
+    assert [k for k in want if got[k] != want[k]] == []
+
+
+def test_visualizations_job_count(spark, f1_cleaned):
+    """The figures of a cached frame come from a few fused passes: a
+    return to per-figure passes (43 jobs on this fixture) fails here."""
+    sc = spark.sparkContext
+    group = "test_visualizations_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        figs = generate_visualizations(f1_cleaned, "churn", n_rows=300)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(figs) == 8
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    # the tracker reads the jobs of the group from the status store
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < len(jobs) <= 10, jobs
 
 
 def test_histogram_figures_carry_kde_polyline(spark):
